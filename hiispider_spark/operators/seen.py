@@ -14,8 +14,9 @@ Design:
   and commutative, so ``treeAggregate(depth=2)`` combines P partial
   filters in O(log P) driver rounds instead of P-way reduce at the
   driver (the reason bloom beats cuckoo here: trivial lossless union),
-- membership is a broadcast of the unioned bytes + an Arrow
-  ``pandas_udf`` doing the k probes vectorized,
+- membership is probed per bucket: each candidate meets only its own
+  bucket's filter (``filter_unseen_partitioned``), and the k probes run
+  as one Column expression in the join's codegen stage,
 - Bloom is a *prefilter only*: false positives would drop URLs, and the
   north rule requires URL-seen membership to match the reference
   exactly, so the authority is an exact anti-join on ``url_hash``
@@ -36,7 +37,7 @@ from functools import lru_cache
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -203,28 +204,6 @@ def union_blooms_tree(
     return out.tobytes()
 
 
-def might_contain_udf(
-    spark: SparkSession,
-    bloom_bytes: bytes,
-    m_bits: int = DEFAULT_M_BITS,
-    k: int = DEFAULT_K,
-):
-    """Vectorized membership probe against a broadcast unioned filter.
-
-    Returns a pandas_udf usable as ``filter(~udf(col("url_hash")))`` to
-    prefilter "definitely unseen" URLs before the exact anti-join.
-    """
-    bc = spark.sparkContext.broadcast(bloom_bytes)
-
-    @F.pandas_udf(T.BooleanType())
-    def might_contain(url_hash: pd.Series) -> pd.Series:
-        bloom = np.frombuffer(bc.value, dtype=np.uint8)
-        h = url_hash.to_numpy(dtype=np.int64).view(np.uint64)
-        return pd.Series(_contains(bloom, h, m_bits, k), index=url_hash.index)
-
-    return might_contain
-
-
 def bloom_might_contain_col(
     h, bloom, m_bits: int, k: int = DEFAULT_K
 ):
@@ -343,28 +322,3 @@ def filter_unseen_partitioned(
     )
     return definitely_new.unionByName(checked)
 
-
-def filter_unseen(
-    new_urls: DataFrame,
-    seen_exact: DataFrame,
-    spark: SparkSession | None = None,
-    bloom_bytes: bytes | None = None,
-    m_bits: int = DEFAULT_M_BITS,
-    k: int = DEFAULT_K,
-) -> DataFrame:
-    """URLs (with url_hash) not yet seen (O-20).
-
-    Bloom has no false negatives, so ``might_contain == False`` proves
-    a URL unseen — those rows skip the join entirely. Only the bloom
-    positives (true hits + fpp false alarms) probe the exact anti-join,
-    which keeps membership exact. At 10^10 scale this cuts the join's
-    probe side to (hit-rate + fpp) of the candidates.
-    """
-    if bloom_bytes is None or spark is None:
-        return new_urls.join(seen_exact, "url_hash", "left_anti")
-    probe = might_contain_udf(spark, bloom_bytes, m_bits, k)
-    flagged = new_urls.withColumn("_maybe_seen", probe(F.col("url_hash")))
-    definitely_new = flagged.filter(~F.col("_maybe_seen")).drop("_maybe_seen")
-    needs_check = flagged.filter(F.col("_maybe_seen")).drop("_maybe_seen")
-    checked = needs_check.join(seen_exact, "url_hash", "left_anti")
-    return definitely_new.unionByName(checked)

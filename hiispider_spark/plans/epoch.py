@@ -84,27 +84,22 @@ class EpochConfig:
     # total grants per epoch across ALL hosts, waterfilled across
     # buckets — None keeps per-host budgets only (golden fixtures)
     max_inflight: int | None = None
-    # Merge-on-read state commits (default — the 10^10 write shape):
-    # each epoch appends a delta file of only the CHANGED rows for every
-    # keyed state table — frontier (requeued + backoff + denied +
-    # inserted; deferred/embargoed rows are byte-unchanged so the base
-    # stays authoritative), page_cache (fetched digests), politeness
-    # (touched hosts) — instead of rewriting every touched bucket. At a
-    # 10^10-row frontier where every bucket dequeues every epoch,
-    # partition-level overwrite still writes O(table) for each of them;
-    # deltas write O(epoch work). Reads resolve newest-wins
-    # (catalog.MERGE_KEYS, size-gated broadcast anti-join); compaction
-    # folds deltas into bucket files when EITHER the file-set count
-    # (read fan-in) or the accumulated delta rows (resolve key-set /
-    # broadcast size) passes its bound. False = partition-level
-    # overwrite commits (byte-identical state, more write amplification).
+    # Merge-on-read state commits (the 10^10 write shape): each epoch
+    # appends a delta file of only the CHANGED rows for every keyed
+    # state table — frontier (requeued + backoff + denied + inserted;
+    # deferred/embargoed rows are byte-unchanged so the base stays
+    # authoritative), page_cache (fetched digests), politeness (touched
+    # hosts). Deltas write O(epoch work), not O(touched buckets). Reads
+    # resolve newest-wins (catalog.MERGE_KEYS, size-gated broadcast
+    # anti-join); compaction folds deltas into bucket files when EITHER
+    # the file-set count (read fan-in) or the accumulated delta rows
+    # (resolve key-set / broadcast size) passes its bound, and vacuums
+    # the superseded files right after the commit. This is the only
+    # commit mode: ``state_deltas`` is an input check that accepts True
+    # alone (kept so existing callers that pass it keep working).
     state_deltas: bool = True
     compact_every: int = 8
     compact_delta_rows: int = 4_000_000
-    # Reclaim superseded version dirs right after a compaction commits
-    # (catalog.vacuum — Iceberg expire_snapshots analogue). Off only
-    # for debugging/forensics on dead snapshots.
-    vacuum_after_compact: bool = True
     # Crawl-trap guard (operators/traps.py): hosts whose newly
     # discovered links this epoch exceed trap_min_urls AND show a
     # pathological URL shape (segment repetition / depth / query-param
@@ -150,6 +145,13 @@ class EpochConfig:
     recrawl_min_s: float = 60.0
     recrawl_max_s: float = 604800.0
 
+    def __post_init__(self) -> None:
+        if not self.state_deltas:
+            raise ValueError(
+                "state_deltas must be True: merge-on-read deltas are the "
+                "only state-commit mode"
+            )
+
     @classmethod
     def production(cls, **overrides) -> "EpochConfig":
         """Every scale guard ON — the configuration a 10^10-URL
@@ -171,7 +173,6 @@ class EpochConfig:
             max_inflight=1 << 20,        # global in-flight cap
             politeness_impl="column",    # JVM twin (fetch is a join)
             boot_stagger_s=300,          # spread the first-fetch wave
-            state_deltas=True,           # merge-on-read state commits
             collect_stats=True,
         )
         base.update(overrides)
@@ -220,18 +221,16 @@ def bootstrap(
     )
     all_parts = list(range(cfg.n_partitions))
     cat.stage_overwrite_parts("frontier", frontier, "part_id", all_parts)
-    frontier_c = cat.read_staged("frontier")  # materialized once on disk
-    if cfg.state_deltas:
-        # seen_exact ≡ frontier membership: reference the frontier's
-        # bucket files instead of writing a url_hash copy of the table
-        cat.stage_append_ref(
-            "seen_exact", cat.staged_part_rels("frontier"), replace=True
-        )
-    else:
-        cat.stage_overwrite("seen_exact", frontier_c.select("url_hash"))
+    # seen_exact ≡ frontier membership: reference the frontier's bucket
+    # files instead of writing a url_hash copy of the table
+    cat.stage_append_ref(
+        "seen_exact", cat.staged_part_rels("frontier"), replace=True
+    )
     cat.stage_overwrite_parts(
         "seen_set",
-        seen_ops.build_partition_blooms(frontier_c, cfg.bloom_m_bits),
+        seen_ops.build_partition_blooms(
+            cat.read_staged("frontier"), cfg.bloom_m_bits
+        ),
         "partition_id",
         all_parts,
     )
@@ -291,7 +290,7 @@ def run_epoch(
     # host-level negative cache: embargoed hosts drop out before any
     # downstream shuffle (O-7 — "avoid known-dead work early")
     neg_cache = cat.read("neg_cache")
-    eligible, embargoed = filter_embargoed(sl, neg_cache, ts)
+    eligible, _ = filter_embargoed(sl, neg_cache, ts)
 
     # politeness: robots prefix rules then per-host token buckets
     allowed, denied = pol.split_robots(eligible, robots)
@@ -318,7 +317,6 @@ def run_epoch(
     # whose only effect was moving the same work one job earlier.
     bucketed = bucketed.persist()
     granted = bucketed.filter(F.col("granted")).select(*FRONTIER_COLS)
-    deferred = bucketed.filter(~F.col("granted")).select(*FRONTIER_COLS)
 
     # fetch = join against the page store; sha1 change detection.
     # DISK_ONLY: these rows carry html bytes — unrolling them into the
@@ -444,46 +442,16 @@ def run_epoch(
     # extract + link-discovery phases below. Same frames, same staged
     # bytes as the post-phase pool they replace.
     new_state = pol.next_politeness_state(bucketed, ts, cfg.n_partitions)
-    if cfg.state_deltas:
-        # delta = exactly this epoch's changed keys: fetched digests /
-        # touched hosts. O(slice) rows, a handful of files; no carried
-        # read, no per-table parts collect.
-        cache_job = lambda: cat.stage_append_delta(  # noqa: E731
-            "page_cache",
-            cache_rows.coalesce(_delta_files(n_fetched, cfg.n_partitions)),
-        )
-        politeness_job = lambda: cat.stage_append_delta(  # noqa: E731
-            "politeness", new_state.coalesce(1)
-        )
-    else:
-        # fetched rows replace their digests, the rest of the touched
-        # buckets carry; untouched buckets never open
-        def cache_job() -> None:
-            cache_next = cache_rows.unionByName(
-                cat.read_parts("page_cache", touched).join(
-                    fetched_meta.select("url_hash"), "url_hash", "left_anti"
-                )
-            )
-            cat.stage_overwrite_parts(
-                "page_cache", cache_next, "part_id", touched
-            )
-
-        # updated hosts replace; only their host-hash buckets rewrite
-        # (manifest-pruned paths), every other bucket carries by
-        # reference. pol_parts is a tiny collect over this epoch's
-        # hosts — computed inside the write thread.
-        def politeness_job() -> None:
-            pol_parts = sorted(
-                r.part_id
-                for r in new_state.select("part_id").distinct().collect()
-            )
-            carried = cat.read_parts("politeness", pol_parts).join(
-                new_state.select("host"), "host", "left_anti"
-            )
-            cat.stage_overwrite_parts(
-                "politeness", new_state.unionByName(carried), "part_id",
-                pol_parts,
-            )
+    # delta = exactly this epoch's changed keys: fetched digests /
+    # touched hosts. O(slice) rows, a handful of files; no carried read,
+    # no per-table parts collect.
+    cache_job = lambda: cat.stage_append_delta(  # noqa: E731
+        "page_cache",
+        cache_rows.coalesce(_delta_files(n_fetched, cfg.n_partitions)),
+    )
+    politeness_job = lambda: cat.stage_append_delta(  # noqa: E731
+        "politeness", new_state.coalesce(1)
+    )
 
     neg_next = next_neg_cache(
         neg_cache, failed, ts, cfg.neg_cache_fail_threshold, cfg.neg_cache_ttl_s
@@ -623,94 +591,58 @@ def run_epoch(
             .select(*FRONTIER_COLS)
         )
     backoff = requeue_failed(failed.select(*FRONTIER_COLS), ts)
-    touched_all = sorted(set(touched) | set(ins_parts))
-    if cfg.state_deltas:
-        # merge-on-read commit: ONLY the rows this epoch changed —
-        # requeued/backoff (schedule advanced), denied (state flips to
-        # robots_denied, leaving the pending pool), inserted (new).
-        # deferred/embargoed rows went back byte-unmodified — their
-        # base-file copies stay authoritative, so they don't appear here.
-        frontier_delta = (
-            requeued.select(*FRONTIER_COLS)
-            .unionByName(backoff.select(*FRONTIER_COLS))
-            .unionByName(denied.select(*FRONTIER_COLS))
+    # merge-on-read commit: ONLY the rows this epoch changed —
+    # requeued/backoff (schedule advanced), denied (state flips to
+    # robots_denied, leaving the pending pool), inserted (new).
+    # deferred/embargoed rows went back byte-unmodified — their
+    # base-file copies stay authoritative, so they don't appear here.
+    frontier_delta = (
+        requeued.select(*FRONTIER_COLS)
+        .unionByName(backoff.select(*FRONTIER_COLS))
+        .unionByName(denied.select(*FRONTIER_COLS))
+    )
+    if inserted is not None:
+        frontier_delta = frontier_delta.unionByName(
+            inserted.select(*FRONTIER_COLS)
         )
-        if inserted is not None:
-            frontier_delta = frontier_delta.unionByName(
-                inserted.select(*FRONTIER_COLS)
-            )
-        # fold-on-write: when the pre-write accounting already proves
-        # the compaction bound will trip this epoch (prior staged delta
-        # rows/file-sets plus this epoch's upper bound n_dequeued +
-        # n_inserted ≥ the same bounds compact() checks post-write),
-        # write the resolved buckets ONCE via stage_upsert_fold instead
-        # of delta-append + immediate compact — identical end state,
-        # half the write bytes, and the O(delta-buckets) rewrite moves
-        # into the overlapped write pool instead of running serially
-        # after it. The upper bound can fold at most one epoch earlier
-        # than the post-write exact counts — strictly tighter on the
-        # invariants the bounds protect (read fan-in, resolve key-set).
-        fold_frontier = (
-            cat.delta_count("frontier") + 1 >= cfg.compact_every
-            or cat.delta_row_count("frontier") + n_dequeued + n_inserted
-            >= cfg.compact_delta_rows
-        )
-        if not fold_frontier:
-            # the 3-way union stacks ~3×P partitions → 3×P files; merge
-            # narrow (no shuffle) down to a row-count-derived file count
-            # (delta rows ≈ dequeued slice + inserts, already counted)
-            frontier_delta = frontier_delta.coalesce(
-                _delta_files(n_dequeued + n_inserted, cfg.n_partitions)
-            )
-        new_frontier = None
-    else:
-        # partition-level overwrite: only buckets this epoch touched
-        # (dequeued from, or inserted into) are rewritten; all other
-        # buckets carry over by manifest reference. ``resident`` = rows
-        # of touched buckets that were NOT dequeued — read via
-        # manifest-pruned bucket paths, never a full-table scan.
-        resident = cat.read_parts("frontier", touched_all).join(
-            sl.select("url_hash"), "url_hash", "left_anti"
-        )
-        new_frontier = (
-            resident.select(*FRONTIER_COLS)
-            .unionByName(requeued.select(*FRONTIER_COLS))
-            .unionByName(backoff.select(*FRONTIER_COLS))
-            .unionByName(denied.select(*FRONTIER_COLS))
-            .unionByName(deferred)
-            .unionByName(embargoed.select(*FRONTIER_COLS))  # retry post-TTL
-        )
-        if inserted is not None:
-            new_frontier = new_frontier.unionByName(
-                inserted.select(*FRONTIER_COLS)
-            )
-        new_frontier = new_frontier.repartition(cfg.n_partitions, "part_id")
-
+    # fold-on-write: when the pre-write accounting already proves the
+    # compaction bound will trip this epoch (prior staged delta
+    # rows/file-sets plus this epoch's upper bound n_dequeued +
+    # n_inserted ≥ the same bounds compact() checks post-write), write
+    # the resolved buckets ONCE via stage_upsert_fold instead of
+    # delta-append + immediate compact — identical end state, half the
+    # write bytes, and the O(delta-buckets) rewrite moves into the
+    # overlapped write pool instead of running serially after it. The
+    # upper bound can fold at most one epoch earlier than the post-write
+    # exact counts — strictly tighter on the invariants the bounds
+    # protect (read fan-in, resolve key-set).
+    fold_frontier = (
+        cat.delta_count("frontier") + 1 >= cfg.compact_every
+        or cat.delta_row_count("frontier") + n_dequeued + n_inserted
+        >= cfg.compact_delta_rows
+    )
     # frontier + seen writes are the last to become schedulable (they
     # need the inserted set); everything else is already in flight
-    if cfg.state_deltas and fold_frontier:
+    if fold_frontier:
         frontier_job = lambda: cat.stage_upsert_fold(  # noqa: E731
             "frontier", frontier_delta, "part_id",
             n_rows=n_dequeued + n_inserted,
         )
-    elif cfg.state_deltas:
-        frontier_job = lambda: cat.stage_append_delta(  # noqa: E731
-            "frontier", frontier_delta, n_new_keys=n_inserted
-        )
     else:
-        frontier_job = lambda: cat.stage_overwrite_parts(  # noqa: E731
-            "frontier", new_frontier, "part_id", touched_all
+        # the 3-way union stacks ~3×P partitions → 3×P files; merge
+        # narrow (no shuffle) down to a row-count-derived file count
+        # (delta rows ≈ dequeued slice + inserts, already counted)
+        frontier_job = lambda: cat.stage_append_delta(  # noqa: E731
+            "frontier",
+            frontier_delta.coalesce(
+                _delta_files(n_dequeued + n_inserted, cfg.n_partitions)
+            ),
+            n_new_keys=n_inserted,
         )
     _submit("frontier", frontier_job)
+    # seen_exact needs no write job: it is a manifest reference to the
+    # frontier files, added after the pool
     if cfg.follow_links and ins_parts:  # nothing new discovered → no-op
-        if not cfg.state_deltas:
-            # bare 8-byte hashes: a handful of files is plenty, and
-            # the driver-side commit cost is per file. (In delta
-            # mode seen_exact comes for free — a manifest reference
-            # to the frontier delta files, added after the pool.)
-            _submit("seen_exact", lambda: cat.stage_append(
-                "seen_exact", inserted.select("url_hash").coalesce(8)
-            ))
         _submit("seen_set", lambda: cat.stage_overwrite_parts(
             "seen_set",
             seen_ops.merge_partition_blooms(
@@ -727,46 +659,45 @@ def run_epoch(
             f.result()
     finally:
         pool.shutdown(wait=False)
-    if cfg.state_deltas:
-        if fold_frontier:
-            # the fold wrote resolved bucket files and cleared every
-            # frontier delta inside the pool — swap seen_exact to
-            # reference exactly those bucket files (same move the
-            # post-hoc compact branch makes) and record the fold as
-            # this epoch's frontier compaction.
-            cat.stage_append_ref(
-                "seen_exact", cat.staged_part_rels("frontier"),
-                replace=True,
-            )
-            compacted.append("frontier")
-        elif ins_parts:
-            # seen_exact ⊇ frontier membership and frontier rows are
-            # never deleted → the just-written frontier delta (which
-            # contains every inserted row's url_hash, plus harmless
-            # already-seen duplicates) IS this epoch's seen_exact
-            # append. Zero extra bytes written, one fewer write job.
-            cat.stage_append_ref(
-                "seen_exact", cat.staged_delta_rels("frontier")[-1:]
-            )
-        # fold deltas into base bucket files inside this transaction
-        # when either bound trips: file-set count (read fan-in) or
-        # accumulated delta rows (resolve key-set / broadcast size)
-        for tbl in ("frontier", "page_cache", "politeness"):
-            if (
-                cat.delta_count(tbl) >= cfg.compact_every
-                or cat.delta_row_count(tbl) >= cfg.compact_delta_rows
-            ):
-                cat.compact(tbl)
-                compacted.append(tbl)
-                if tbl == "frontier":
-                    # membership ≡ the compacted frontier: swap
-                    # seen_exact to reference exactly those bucket
-                    # files — stays O(table) refs, never grows stale
-                    cat.stage_append_ref(
-                        "seen_exact",
-                        cat.staged_part_rels("frontier"),
-                        replace=True,
-                    )
+    if fold_frontier:
+        # the fold wrote resolved bucket files and cleared every
+        # frontier delta inside the pool — swap seen_exact to
+        # reference exactly those bucket files (same move the
+        # post-hoc compact branch makes) and record the fold as
+        # this epoch's frontier compaction.
+        cat.stage_append_ref(
+            "seen_exact", cat.staged_part_rels("frontier"),
+            replace=True,
+        )
+        compacted.append("frontier")
+    elif ins_parts:
+        # seen_exact ⊇ frontier membership and frontier rows are
+        # never deleted → the just-written frontier delta (which
+        # contains every inserted row's url_hash, plus harmless
+        # already-seen duplicates) IS this epoch's seen_exact
+        # append. Zero extra bytes written, no write job.
+        cat.stage_append_ref(
+            "seen_exact", cat.staged_delta_rels("frontier")[-1:]
+        )
+    # fold deltas into base bucket files inside this transaction
+    # when either bound trips: file-set count (read fan-in) or
+    # accumulated delta rows (resolve key-set / broadcast size)
+    for tbl in ("frontier", "page_cache", "politeness"):
+        if (
+            cat.delta_count(tbl) >= cfg.compact_every
+            or cat.delta_row_count(tbl) >= cfg.compact_delta_rows
+        ):
+            cat.compact(tbl)
+            compacted.append(tbl)
+            if tbl == "frontier":
+                # membership ≡ the compacted frontier: swap
+                # seen_exact to reference exactly those bucket
+                # files — stays O(table) refs, never grows stale
+                cat.stage_append_ref(
+                    "seen_exact",
+                    cat.staged_part_rels("frontier"),
+                    replace=True,
+                )
     _mark("writes")
 
     stats = {
@@ -792,7 +723,7 @@ def run_epoch(
         if fs is not None:
             stats["frontier_size"] = fs
     cat.commit(epoch=e)
-    if compacted and cfg.vacuum_after_compact:
+    if compacted:
         # compaction just superseded this table's delta files and the
         # rewritten bucket dirs' old versions; reclaim them now (O(files)
         # driver-side, no job). Safe here: the commit landed and every

@@ -17,6 +17,37 @@ from pyspark.sql import SparkSession
 # function of table state, never of parallelism — SURVEY.md §7).
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
+#: share of the memory the process can get that the default driver heap
+#: takes. In local mode the driver heap holds every executor's work, but
+#: the Arrow/pandas Python workers and the JVM's off-heap memory live
+#: outside it, so the heap cannot take all of it.
+DRIVER_MEM_FRACTION = 0.4
+
+
+def default_driver_memory() -> str:
+    """``DRIVER_MEM_FRACTION`` of ``MemAvailable``, capped by the cgroup
+    v2 ``memory.max`` when one is set (a container's limit can sit far
+    below the host's free memory). A heap above physical memory gets the
+    JVM OOM-killed mid-run instead of spilling."""
+    avail = None
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemAvailable:"):
+                    avail = int(line.split()[1]) * 1024
+                    break
+    except OSError:
+        pass
+    try:
+        with open("/sys/fs/cgroup/memory.max") as f:
+            limit = int(f.read().strip())  # "max" (no limit) → ValueError
+        avail = limit if avail is None else min(avail, limit)
+    except (OSError, ValueError):
+        pass
+    if avail is None:
+        return "2g"
+    return f"{max(1024, int(avail * DRIVER_MEM_FRACTION) >> 20)}m"
+
 
 def get_spark(
     app: str = "hiispider_spark",
@@ -25,7 +56,9 @@ def get_spark(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = int(
+            os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0)))
+        )
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app)
@@ -65,26 +98,20 @@ def get_spark(
         # spark.scheduler.pool local property (run_epoch does);
         # single-job phases are unaffected by scheduler mode.
         .config("spark.scheduler.mode", "FAIR")
-        # local mode: driver heap is ALL memory. Wide rows (html bytes)
-        # need ~task_concurrency × partition_bytes of headroom — 8g with
-        # 32 tasks of 200MB+ partitions OOMs; default generously.
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        # local mode: driver heap is ALL executor memory. Wide rows
+        # (html bytes) need ~task_concurrency × partition_bytes of
+        # headroom; the default is sized from the machine
+        # (default_driver_memory), SPARK_DRIVER_MEM overrides it.
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory(),
+        )
     )
-    # Shuffle/spill scratch on the fastest local device (guide §6:
-    # shuffle bytes are disk bytes). This sandbox's only disk is one
-    # shared virtio device whose multi-second stalls were measured as
-    # the dominant variance in every shuffle-heavy query (identical
-    # code: 2 s quiet vs 16 s under a disk stall), while RAM sits at
-    # <15 % used — so scratch defaults to tmpfs when present. The same
-    # knob on a real cluster points at local NVMe (standard Spark ops
-    # practice); env-overridable either way, and Spark's own
-    # SPARK_LOCAL_DIRS takes precedence if set. State-table WRITES are
-    # unaffected (they go to the catalog root the caller chose).
-    local_dir = os.environ.get("SPARK_GRAFT_LOCAL_DIR", "")
-    if not local_dir and os.path.isdir("/dev/shm") and os.access(
-        "/dev/shm", os.W_OK
-    ):
-        local_dir = "/dev/shm/spark-scratch"
+    # Shuffle/spill scratch: opt-in only. Scratch on tmpfs would spend
+    # the RAM that spilling exists to relieve, so without
+    # SPARK_GRAFT_LOCAL_DIR Spark's own SPARK_LOCAL_DIRS / spark.local.dir
+    # apply.
+    local_dir = os.environ.get("SPARK_GRAFT_LOCAL_DIR")
     if local_dir:
         builder = builder.config("spark.local.dir", local_dir)
     # JVM JIT headroom for the generated-code working set (env-tunable;

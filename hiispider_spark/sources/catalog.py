@@ -51,7 +51,7 @@ MERGE_KEYS = {
 }
 
 #: Time layout: sort rows by these columns WITHIN each bucket file at
-#: every partition-level write (bootstrap, overwrite commits, and —
+#: every partition-level write (bootstrap, the fold-on-write, and —
 #: the one that matters at scale — compaction). The frontier's hottest
 #: read is the dequeue's ``next_fetch_ts <= epoch_ts`` scan: with rows
 #: time-sorted, parquet row-group min/max stats make most of a

@@ -165,25 +165,14 @@ def stream_cdx_frontier(
             n = int(sum(r["count"] for r in per_part))
             if n:
                 parts = sorted(r.part_id for r in per_part)
-                if cfg.state_deltas:
-                    cat.stage_append_delta(
-                        "frontier",
-                        inserted.coalesce(_delta_files(n, cfg.n_partitions)),
-                        n_new_keys=n,
-                    )
-                    cat.stage_append_ref(
-                        "seen_exact", cat.staged_delta_rels("frontier")[-1:]
-                    )
-                else:
-                    merged = cat.read_parts("frontier", parts).unionByName(
-                        inserted
-                    )
-                    cat.stage_overwrite_parts(
-                        "frontier", merged, "part_id", parts
-                    )
-                    cat.stage_append(
-                        "seen_exact", inserted.select("url_hash").coalesce(8)
-                    )
+                cat.stage_append_delta(
+                    "frontier",
+                    inserted.coalesce(_delta_files(n, cfg.n_partitions)),
+                    n_new_keys=n,
+                )
+                cat.stage_append_ref(
+                    "seen_exact", cat.staged_delta_rels("frontier")[-1:]
+                )
                 cat.stage_overwrite_parts(
                     "seen_set",
                     seen_ops.merge_partition_blooms(

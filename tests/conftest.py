@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from hiispider_spark.session import get_spark
@@ -12,7 +14,8 @@ TINY = SynthConfig(n_pages=400, n_docs=500)
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app="hiispider-tests", cpus=8, shuffle_partitions=8)
+    cpus = min(8, len(os.sched_getaffinity(0)))
+    s = get_spark(app="hiispider-tests", cpus=cpus, shuffle_partitions=8)
     yield s
     s.stop()
 

@@ -52,20 +52,6 @@ def test_partition_blooms_and_tree_union(spark):
     assert bytes(direct) == unioned
 
 
-def test_filter_unseen_exactness(spark):
-    all_urls = spark.range(1000).select(F.xxhash64("id").alias("url_hash"))
-    seen_exact = all_urls.filter(F.col("url_hash") % 2 == 0)
-    blooms = seen.build_partition_blooms(
-        seen_exact.withColumn("part_id", F.lit(0)), M, K
-    )
-    bloom_bytes = seen.union_blooms_tree(blooms, M)
-    got = seen.filter_unseen(all_urls, seen_exact, spark, bloom_bytes, M, K)
-    expected = all_urls.join(seen_exact, "url_hash", "left_anti")
-    assert sorted(r.url_hash for r in got.collect()) == sorted(
-        r.url_hash for r in expected.collect()
-    )
-
-
 def test_jvm_probe_matches_numpy(spark):
     """bloom_might_contain_col (pure Column expr) is bit-identical to
     the numpy _contains over the same stored word-array filter."""

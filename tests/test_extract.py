@@ -7,7 +7,6 @@ from pyspark.sql import functions as F
 from hiispider_spark.operators.extract import (
     evaluate_boolean_col,
     links_extract_udf,
-    routed_extract_udf,
     run_extraction,
     text_extract_col,
     text_extract_udf,
@@ -72,22 +71,26 @@ def test_plugin_routing_per_url(spark, tiny_pages):
     """O-10: two plugins on one slice produce each plugin's own output
     per URL, in a single routed pass; unknown plugins fall back to text."""
     slice_ = tiny_pages.limit(20).select(
+        F.col("i").cast("long").alias("url_hash"),
         "url",
         "html",
         F.when(F.col("i") % 2 == 0, F.lit("anchor"))
         .when(F.col("i") % 5 == 1, F.lit("no_such_plugin"))
         .otherwise(F.lit("text"))
         .alias("plugin"),
-        F.col("text").alias("expected_text"),
+        F.sha1("html").alias("content_sha1"),
     )
-    got = slice_.withColumn(
-        "out", routed_extract_udf(F.col("html"), F.col("plugin"))
+    got = run_extraction(slice_, epoch=1).join(
+        tiny_pages.select("url", F.col("text").alias("expected_text")), "url"
     )
+    assert got.count() == 20
     anchors = got.filter(F.col("plugin") == "anchor")
     assert anchors.count() > 0
-    assert anchors.filter(~F.col("out").startswith("http://")).count() == 0
+    assert anchors.filter(~F.col("text").startswith("http://")).count() == 0
+    fallback = got.filter(F.col("plugin") == "no_such_plugin")
+    assert fallback.count() > 0
     texts = got.filter(F.col("plugin") != "anchor")
-    assert texts.filter(F.col("out") != F.col("expected_text")).count() == 0
+    assert texts.filter(F.col("text") != F.col("expected_text")).count() == 0
 
 
 def test_run_extraction_uses_row_plugin(spark, tiny_pages):
@@ -210,18 +213,19 @@ def test_meta_plugin_and_column_twin(spark):
 
 
 def test_meta_plugin_routes(spark):
-    """routed_extract_udf dispatches plugin='meta' rows to the meta
-    impl in the same pass as text rows."""
+    """run_extraction dispatches plugin='meta' rows to the meta impl in
+    the same pass as text rows."""
     import json
-
-    from hiispider_spark.operators.extract import routed_extract_udf
 
     html = b'<html><head><meta name="description" content="d"></head><body>body text</body></html>'
     df = spark.createDataFrame(
-        [(html, "meta"), (html, "text")], "html binary, plugin string"
+        [(1, "u1", html, "meta", "s"), (2, "u2", html, "text", "s")],
+        "url_hash long, url string, html binary, plugin string, "
+        "content_sha1 string",
     )
-    out = [r.o for r in df.select(
-        routed_extract_udf("html", "plugin").alias("o")
-    ).collect()]
-    assert json.loads(out[0])["description"] == "d"
-    assert "body text" in out[1] and "<" not in out[1]
+    out = {
+        r.url: r.text
+        for r in run_extraction(df, epoch=1).select("url", "text").collect()
+    }
+    assert json.loads(out["u1"])["description"] == "d"
+    assert "body text" in out["u2"] and "<" not in out["u2"]

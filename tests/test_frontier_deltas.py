@@ -1,12 +1,16 @@
 """Merge-on-read frontier delta commits (the true 10^10 write shape).
 
-Partition-level overwrite still rewrites O(frontier) when every bucket
-dequeues every epoch (the steady state of a real crawl). Delta commits
-write only the epoch's CHANGED rows (requeued + backoff + inserted);
-reads resolve newest-key-wins with a broadcast anti-join; compaction
-folds deltas back into bucket files. These tests pin:
+Rewriting touched buckets costs O(frontier) when every bucket dequeues
+every epoch (the steady state of a real crawl). Delta commits write
+only the epoch's CHANGED rows (requeued + backoff + inserted); reads
+resolve newest-key-wins with a broadcast anti-join; compaction folds
+deltas back into bucket files. The reference twin is a catalog with
+``compact_every=1``: its pre-write bound trips every epoch, so every
+state table is folded into resolved bucket files each epoch (base-only
+state), against the pure merge-on-read ``compact_every=100`` side.
+These tests pin:
 
-- exact equivalence with the overwrite path over multiple epochs,
+- exact equivalence of the two over multiple epochs,
 - write amplification: a delta epoch adds ONE delta file set and leaves
   every base bucket file untouched,
 - compaction preserves state and clears deltas inside the transaction,
@@ -30,11 +34,13 @@ from hiispider_spark.plans.epoch import EpochConfig, bootstrap, run_epoch
 from hiispider_spark.schemas import FRONTIER
 from hiispider_spark.sources.catalog import IcebergLike
 
+# folds every state table into bucket files every epoch
 CFG = EpochConfig(
     k_per_partition=8, n_partitions=8, bloom_m_bits=1 << 17,
-    epoch_seconds=60.0, state_deltas=False,
+    epoch_seconds=60.0, compact_every=1,
 )
-DELTA_CFG = replace(CFG, state_deltas=True, compact_every=100)
+# never compacts within these tests: pure merge-on-read
+DELTA_CFG = replace(CFG, compact_every=100)
 
 
 def _mk_cat(spark, seeds, cfg, prefix):
@@ -59,7 +65,7 @@ def _manifest_entry(cat, name="frontier"):
 
 @pytest.fixture()
 def two_cats(spark, tiny_seeds):
-    a = _mk_cat(spark, tiny_seeds, CFG, "fd_ow_")
+    a = _mk_cat(spark, tiny_seeds, CFG, "fd_fold_")
     b = _mk_cat(spark, tiny_seeds, DELTA_CFG, "fd_mor_")
     yield a, b
     shutil.rmtree(a.root, ignore_errors=True)
@@ -69,12 +75,21 @@ def two_cats(spark, tiny_seeds):
 def test_delta_epochs_match_overwrite_epochs(
     spark, two_cats, tiny_pages, tiny_robots
 ):
+    # deltas are the only commit mode: the removed partition-overwrite
+    # mode is refused up front, not silently run as deltas
+    with pytest.raises(ValueError, match="state_deltas"):
+        EpochConfig(state_deltas=False)
+    with pytest.raises(ValueError, match="state_deltas"):
+        replace(CFG, state_deltas=False)
     ow, mor = two_cats
     for _ in range(3):
         st_ow = run_epoch(spark, ow, tiny_pages, tiny_robots, CFG)
         st_mor = run_epoch(spark, mor, tiny_pages, tiny_robots, DELTA_CFG)
         for k in ("n_dequeued", "n_fetched", "n_extracted", "frontier_size"):
             assert st_ow[k] == st_mor[k], k
+        assert "frontier" in st_ow["compacted"]
+        assert not st_mor["compacted"]
+        assert not _manifest_entry(ow).get("deltas")
     assert _frontier_rows(ow) == _frontier_rows(mor)
     # downstream facts identical too
     ex_a = ow.read("extracted").select("url_hash", "epoch", "content_sha1")
@@ -102,10 +117,12 @@ def test_all_state_tables_delta_commit(spark, two_cats, tiny_pages, tiny_robots)
     """page_cache and politeness get the same merge-on-read treatment
     as the frontier: a delta epoch appends one delta per table, leaves
     every base bucket untouched, and reads resolve identically to the
-    overwrite twin."""
+    every-epoch-folded twin."""
     ow, mor = two_cats
     for _ in range(2):
         run_epoch(spark, ow, tiny_pages, tiny_robots, CFG)
+        for t in ("frontier", "page_cache", "politeness"):
+            assert not _manifest_entry(ow, t).get("deltas"), t
         before = {t: _manifest_entry(mor, t) if t in
                   json.load(open(os.path.join(mor.root, "manifest.json")))["tables"]
                   else None
@@ -129,9 +146,10 @@ def test_all_state_tables_delta_commit(spark, two_cats, tiny_pages, tiny_robots)
 
 
 def test_seen_exact_by_reference(spark, two_cats, tiny_pages, tiny_robots):
-    """In delta mode seen_exact is manifest references into frontier
-    files (zero extra bytes written) — membership must still equal the
-    overwrite twin's materialized seen_exact after epochs + compaction."""
+    """seen_exact is manifest references into frontier files (zero
+    extra bytes written) — its membership must equal the frontier's
+    url_hash set, and agree between the every-epoch-folded twin and a
+    catalog compacting every 2 epochs."""
     ow, mor = two_cats
     compact_cfg = replace(DELTA_CFG, compact_every=2)
     for _ in range(3):
@@ -140,14 +158,19 @@ def test_seen_exact_by_reference(spark, two_cats, tiny_pages, tiny_robots):
     a = {r.url_hash for r in ow.read("seen_exact").collect()}
     b = {r.url_hash for r in mor.read("seen_exact").collect()}
     assert a == b
-    # every referenced path belongs to the frontier's directory tree
-    entry = _manifest_entry(mor, "seen_exact")
-    assert entry["paths"]
-    assert all(p.startswith("frontier/") for p in entry["paths"])
+    for cat in (ow, mor):
+        fr = {r.url_hash for r in cat.read("frontier").collect()}
+        seen = {r.url_hash for r in cat.read("seen_exact").collect()}
+        assert seen == fr
+        # every referenced path belongs to the frontier's directory tree
+        entry = _manifest_entry(cat, "seen_exact")
+        assert entry["paths"]
+        assert all(p.startswith("frontier/") for p in entry["paths"])
 
 
 def test_row_count_from_manifest(spark, two_cats, tiny_pages, tiny_robots):
-    """catalog.row_count is exact with zero jobs in BOTH commit modes."""
+    """catalog.row_count is exact with zero jobs whether the frontier
+    is base-only (folded every epoch) or base + pending deltas."""
     ow, mor = two_cats
     for _ in range(2):
         st_ow = run_epoch(spark, ow, tiny_pages, tiny_robots, CFG)

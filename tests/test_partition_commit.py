@@ -1,7 +1,8 @@
 """Round-2 scale-shape guards:
 
-- partition-level commit: an epoch that touches 2 of 8 buckets rewrites
-  only those bucket directories; the rest carry by manifest reference,
+- partition-level commit: an epoch whose fold touches 2 of 8 buckets
+  rewrites only those bucket directories; the rest carry by manifest
+  reference,
 - the conditional-GET cache is a compact state table (the extracted
   history is never re-read, let alone re-aggregated, inside an epoch),
 - the bloom probe is co-partitioned (no treeAggregate of the unioned
@@ -25,11 +26,12 @@ from hiispider_spark.operators.frontier import build_frontier
 from hiispider_spark.plans.epoch import EpochConfig, bootstrap, run_epoch
 from hiispider_spark.sources.catalog import IcebergLike
 
-# these guards pin the partition-OVERWRITE commit shape; the (default)
-# delta mode's write-amplification guards live in test_frontier_deltas
+# the delta-append write-amplification guards live in
+# test_frontier_deltas; these pin what the fold rewrites and what an
+# epoch reads
 CFG = EpochConfig(
     k_per_partition=8, n_partitions=8, bloom_m_bits=1 << 17,
-    epoch_seconds=60.0, state_deltas=False,
+    epoch_seconds=60.0,
 )
 FAR = "2030-01-01 00:00:00"
 
@@ -59,10 +61,17 @@ def test_epoch_rewrites_only_touched_buckets(spark, cat, tiny_pages, tiny_robots
     cat.stage_overwrite_parts("frontier", fr, "part_id", list(range(8)))
     cat.commit(epoch=0)
     before = _frontier_parts(cat)
+    # counted now: the post-fold vacuum removes the files fr reads
+    n_rows = fr.count()
 
-    cfg = replace(CFG, follow_links=False)
+    # compact_every=1: the pre-write bound trips, so the epoch folds its
+    # frontier delta straight into resolved bucket files
+    cfg = replace(CFG, follow_links=False, compact_every=1)
     st = run_epoch(spark, cat, tiny_pages, tiny_robots, cfg)
     assert st["n_dequeued"] > 0
+    assert "frontier" in st["compacted"]
+    with open(os.path.join(cat.root, "manifest.json")) as f:
+        assert not json.load(f)["tables"]["frontier"].get("deltas")
     after = _frontier_parts(cat)
     changed = {p for p in after if after[p] != before.get(p)}
     assert changed == {"1", "3"}
@@ -70,7 +79,7 @@ def test_epoch_rewrites_only_touched_buckets(spark, cat, tiny_pages, tiny_robots
         if p not in changed:
             assert after[p] == before[p]  # carried by reference, same files
     # total membership preserved: untouched rows still readable
-    assert cat.read("frontier").count() == fr.count()
+    assert cat.read("frontier").count() == n_rows
 
 
 def test_extracted_history_not_read_inside_epoch(

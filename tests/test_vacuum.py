@@ -1,5 +1,6 @@
 """Catalog vacuum — superseded-file reclamation (catalog.vacuum)."""
 
+import json
 import os
 
 from hiispider_spark.sources.catalog import IcebergLike
@@ -103,9 +104,10 @@ def test_vacuum_keeps_staged_uncommitted(spark, tmp_path):
 
 
 def test_epoch_vacuum_reclaims_after_compaction(spark, tmp_path):
-    """Driving epochs past the compaction bound with the default
-    vacuum_after_compact reclaims every superseded frontier file; the
-    catalog stays resumable and byte-identical to a no-vacuum twin."""
+    """Driving epochs past the compaction bound vacuums after every
+    compaction: no version or _pid dir on disk is left unreferenced by
+    manifest.json, and the catalog stays resumable and reads the same
+    state as a twin that never compacts (so never vacuums)."""
     from hiispider_spark.plans.epoch import EpochConfig, bootstrap, run_epochs
     from hiispider_spark.sources.synth import (
         SynthConfig,
@@ -119,28 +121,49 @@ def test_epoch_vacuum_reclaims_after_compaction(spark, tmp_path):
     pages = synth_pages(spark, sf, tiny).persist()
     robots = synth_robots(spark, sf, tiny)
     seeds = synth_seeds(spark, sf, tiny)
-    outs = {}
-    for tag, vac in (("vac", True), ("novac", False)):
+    outs, last = {}, {}
+    for tag, every in (("vac", 2), ("novac", 100)):
         cfg = EpochConfig(
             k_per_partition=4,
             n_partitions=4,
             bloom_m_bits=1 << 17,
-            compact_every=2,
-            vacuum_after_compact=vac,
+            compact_every=every,
             boot_stagger_s=0,
         )
         cat = IcebergLike(spark, str(tmp_path / tag))
         bootstrap(spark, cat, seeds, cfg)
-        run_epochs(spark, cat, pages, robots, 3, cfg)
+        # 4 epochs: the frontier folds (and the catalog vacuums) at
+        # epochs 2 and 4, so the run ends right after a vacuum
+        last[tag] = run_epochs(spark, cat, pages, robots, 4, cfg)[-1]
         outs[tag] = cat
     va, nv = outs["vac"], outs["novac"]
+    assert "frontier" in last["vac"]["compacted"]
+    assert not last["novac"]["compacted"]
     for tbl in ("frontier", "extracted", "page_cache"):
         a = sorted(map(tuple, va.read(tbl).collect()))
         b = sorted(map(tuple, nv.read(tbl).collect()))
         assert a == b, tbl
-    # the vacuumed catalog holds strictly fewer files
-    n_files = lambda c: sum(len(fs) for _, _, fs in os.walk(c.root))
-    assert n_files(va) < n_files(nv)
+    # every version dir on disk is referenced whole, or holds only
+    # referenced _pid dirs
+    with open(os.path.join(va.root, "manifest.json")) as f:
+        tables = json.load(f)["tables"]
+    live = set()
+    for e in tables.values():
+        live |= set(e.get("paths", [])) | set(e.get("deltas", []))
+        live |= set(e.get("parts", {}).values())
+    for tbl in tables:
+        for ver in _dirs(va.root, tbl):
+            rel = f"{tbl}/{ver}"
+            vabs = os.path.join(va.root, rel)
+            if rel in live or not os.path.isdir(vabs):
+                continue
+            kids = [
+                c for c in os.listdir(vabs)
+                if os.path.isdir(os.path.join(vabs, c))
+            ]
+            assert kids, rel
+            for c in kids:
+                assert f"{rel}/{c}" in live, f"{rel}/{c}"
     # fresh open (resume) still reads everything
     again = IcebergLike(spark, va.root)
     assert again.read("frontier").count() == va.read("frontier").count()
